@@ -66,16 +66,11 @@ class ExactlyOnceParquetSink(val dir: String) extends Serializable {
 
   def committedEpochs(): Seq[Long] =
     if (!Files.exists(commitsDir)) Seq.empty
-    else {
-      val s = Files.list(commitsDir)
-      try s.iterator().asScala
-        .map(_.getFileName.toString)
-        // "."-prefixed = in-flight tmp markers; "_"-prefixed = the
-        // compaction high-water marker (not a per-epoch commit)
-        .filterNot(n => n.startsWith(".") || n.startsWith("_"))
-        .map(_.toLong).toSeq.sorted
-      finally s.close()
-    }
+    else listNames(commitsDir)
+      // "."-prefixed = in-flight tmp markers; "_"-prefixed = the
+      // compaction high-water marker (not a per-epoch commit)
+      .filterNot(n => n.startsWith(".") || n.startsWith("_"))
+      .map(_.toLong).sorted
 
   /** Read back exactly the committed epochs (uncommitted dirs invisible):
     * the compacted generation, if any, plus every epoch committed since. */
@@ -106,7 +101,9 @@ class ExactlyOnceParquetSink(val dir: String) extends Serializable {
     *     overwrites it);
     *  3. covered epoch dirs, their markers, and the previous generation
     *     are deleted — `isCommitted` answers epochs <= upTo from the
-    *     marker alone, so redelivery dedup survives the marker deletion.
+    *     marker alone, so redelivery dedup survives the marker deletion —
+    *     and so is what earlier crashes left: orphan generations below
+    *     the mark and tmp markers of epochs at or below it.
     *
     * Safe to run WHILE the stream is live (e.g. from a maintenance thread):
     * epochs committing after step 1's listing stay as epoch dirs until the
@@ -141,6 +138,20 @@ class ExactlyOnceParquetSink(val dir: String) extends Serializable {
       rmTree(Paths.get(epochDir(e)))
       Files.deleteIfExists(marker(e))
     }
-    upTo0.foreach(g => rmTree(Paths.get(genDir(g))))
+    // every older generation: upTo0's, and any orphan a crash between a
+    // generation write and its flip left behind
+    listNames(Paths.get(dir)).filter(_.startsWith("_gen="))
+      .filter(_.stripPrefix("_gen=").toLongOption.exists(_ < newUpTo))
+      .foreach(n => rmTree(Paths.get(dir, n)))
+    // tmp markers of covered epochs (a crash between marker write and
+    // rename); one above the mark may belong to an epoch committing now
+    listNames(commitsDir).filter(n => n.startsWith(".") && n.endsWith(".tmp"))
+      .filter(_.stripPrefix(".").stripSuffix(".tmp").toLongOption.exists(_ <= newUpTo))
+      .foreach(n => Files.deleteIfExists(commitsDir.resolve(n)))
+  }
+
+  private def listNames(p: Path): Seq[String] = {
+    val s = Files.list(p)
+    try s.iterator().asScala.map(_.getFileName.toString).toList finally s.close()
   }
 }

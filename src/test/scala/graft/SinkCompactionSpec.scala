@@ -54,6 +54,34 @@ class SinkCompactionSpec extends SparkSpec {
       "the superseded generation must be cleaned up")
   }
 
+  test("compaction sweeps an orphan generation and stale tmp markers, never a live one") {
+    val dir = tmpDir("graft_compact_sweep")
+    val sink = new ExactlyOnceParquetSink(dir)
+    addEpochs(sink, 0 until 4)
+    sink.compact(spark)
+    addEpochs(sink, 4 until 6)
+    val before = view(sink)
+    // what crashes leave: a generation written but never flipped (its mark
+    // is below the next one), and tmp markers never renamed
+    Files.createDirectories(Paths.get(dir, "_gen=4"))
+    Files.write(Paths.get(dir, "_gen=4", "part-0.parquet"), Array[Byte](1, 2, 3))
+    val commits = Paths.get(dir, "_commits")
+    Files.write(commits.resolve(".2.tmp"), "epoch=2".getBytes)
+    Files.write(commits.resolve(".5.tmp"), "epoch=5".getBytes)
+    // an epoch above the new mark still committing while compaction runs
+    Files.write(commits.resolve(".6.tmp"), "epoch=6".getBytes)
+
+    sink.compact(spark)
+    assert(sink.compactedUpTo().contains(5L))
+    assert(!Files.exists(Paths.get(dir, "_gen=4")), "orphan generation below the mark")
+    assert(!Files.exists(Paths.get(dir, "_gen=3")), "superseded generation")
+    assert(Files.exists(Paths.get(dir, "_gen=5")))
+    assert(!Files.exists(commits.resolve(".2.tmp")) && !Files.exists(commits.resolve(".5.tmp")),
+      "tmp markers at or below the mark")
+    assert(Files.exists(commits.resolve(".6.tmp")), "a tmp marker above the mark is live")
+    assert(view(sink) == before, "the sweep must not change the view")
+  }
+
   test("compact on an epoch-less sink is a no-op; empty tail is a no-op") {
     val dir = tmpDir("graft_compact_empty")
     val sink = new ExactlyOnceParquetSink(dir)
